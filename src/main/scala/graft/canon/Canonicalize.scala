@@ -17,6 +17,11 @@ import org.apache.spark.sql.functions._
   *      positional filters, equi-join on shingle, merge-scan verify);
   *      identical result to all-pairs at any scale, never a cross join
   *   3. connected components -> canonical id = min entity_id in component
+  *      (driver union-find while the input is driver-small, else the
+  *      pointer-jumping DataFrame loop, connectedComponentsFast)
+  *
+  * ONE implementation behind two entry points: canonicalMap(Seq) is a
+  * thin call to canonicalMapDf over the Seq's local frame.
   *
   * An OPT-IN MinHash/LSH banding generator (candidateEdgesLsh: K
   * md5-permutation signatures, K/R bands, equal band -> candidate,
@@ -146,95 +151,32 @@ object Canonicalize {
       .select(col("src"), col("dst"))
   }
 
-  /** Connected components by iterative min-label propagation
-    * (driver-controlled DataFrame loop, SURVEY.md §4.3.3), lineage cut per
-    * round via the pluggable `cut` strategy (SURVEY.md §7.4.7): the
-    * sandbox default is localCheckpoint; a cluster run passes
-    * [[graft.plans.LineageCut.Reliable]] (checkpoint dir set) so an
-    * executor loss mid-loop recovers from durable storage instead of
-    * failing the whole job. Converges in O(component diameter) rounds —
-    * alias clusters have diameter <= 2-3. The iteration cap FAILS
-    * LOUDLY: a graph whose diameter exceeds `maxIter` (possible for
-    * corpus-derived open vocabularies with chains of near-duplicate
-    * spellings a-b-c-...) throws instead of returning silently partial
-    * labels; such graphs belong on [[connectedComponentsFast]]
-    * (O(log n) rounds), which [[canonicalMapDf]] uses.
-    *
-    * Returns (entity_id, canonical_id = min id in component).
-    */
-  def connectedComponents(
-      spark: SparkSession,
-      vertices: DataFrame, // (entity_id)
-      edges: DataFrame, // (src, dst)
-      maxIter: Int = 25,
-      cut: graft.plans.LineageCut = graft.plans.LineageCut.Default)
-      : DataFrame = {
-    // pre-partition + pre-sort the loop-invariant symmetric edge table
-    // by the join key once — see connectedComponentsFastWithRounds
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val sym = cut.cut(edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(parts, col("dst"))
-      .sortWithinPartitions(col("dst")))
-
-    var labels = cut.cut(vertices
-      .select(col("entity_id"), col("entity_id").as("canonical_id")))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // l'(v) = min(l(v), min over neighbors u of l(u)), via aggregate +
-      // left join + least rather than union + re-aggregate: the
-      // aggregation input is the join result alone (not join ∪ labels),
-      // and a Union of a checkpointed-lineage labels frame with a frame
-      // derived FROM it trips Spark's union constraint rewrite
-      // (AttributeMap key-not-found on LogicalRDD origin constraints
-      // referencing pruned attributes — observed with a
-      // localCheckpoint()ed entity table as canonicalMapDf input)
-      val neighborMin = sym
-        .join(labels, sym("dst") === labels("entity_id"))
-        .groupBy(sym("src").as("entity_id"))
-        .agg(min(col("canonical_id")).as("__nbr_min"))
-      val next = cut.cut(labels
-        .join(neighborMin, Seq("entity_id"), "left")
-        // least skips NULLs: an isolated vertex keeps its own label
-        .select(col("entity_id"),
-          least(col("canonical_id"), col("__nbr_min")).as("canonical_id")))
-      val changed = next.alias("n")
-        .join(labels.alias("o"), Seq("entity_id"))
-        .filter(col("n.canonical_id") =!= col("o.canonical_id"))
-        .limit(1).count()
-      labels = next
-      converged = changed == 0
-      iter += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter min-label " +
-          "rounds (component diameter exceeds the cap); the partial " +
-          "labels would be a silently WRONG canonical map. Use " +
-          "connectedComponentsFast (pointer-jumping, O(log n) rounds) " +
-          "for high-diameter graphs, or raise maxIter.")
-    labels
-  }
-
   /** Connected components by min-label propagation WITH POINTER JUMPING
-    * (label shortcutting): each round does (A) one neighbor-min
-    * propagation — identical to [[connectedComponents]]'s round — then
-    * (B) one label shortcut l(v) <- l(l(v)), so the min label of a
-    * component travels along label CHAINS as well as edges and the loop
-    * converges in O(log diameter) rounds instead of O(diameter) — a
-    * length-10^6 near-duplicate spelling chain needs ~20 rounds, not
-    * 10^6 (each round is 2 shuffle joins + 1 aggregation; the reference
-    * analog — topic_modeling.py:129-151's iterative merge loop — is the
-    * same shape without the shortcut).
+    * (label shortcutting; driver-controlled DataFrame loop, SURVEY.md
+    * §4.3.3): each round does (A) one neighbor-min propagation
+    * l'(v) = min(l(v), min over neighbors u of l(u)), then (B) one label
+    * shortcut l(v) <- l(l(v)), so the min label of a component travels
+    * along label CHAINS as well as edges and the loop converges in
+    * O(log diameter) rounds instead of O(diameter) — a length-10^6
+    * near-duplicate spelling chain needs ~20 rounds, not 10^6 (each
+    * round is 2 shuffle joins + 1 aggregation; the reference analog —
+    * topic_modeling.py:129-151's iterative merge loop — is the same
+    * shape without the shortcut).
     *
-    * Invariants (parity with the min-label loop pinned in
-    * GraphXFallbackSpec/CanonComponentsSpec): every label a vertex ever
+    * Invariants (pinned against local union-find and GraphX in
+    * CanonComponentsSpec/GraphXFallbackSpec): every label a vertex ever
     * holds is the id of a vertex in ITS component (propagation moves
     * labels along edges; shortcutting along label chains, both
     * component-preserving), labels only decrease, and at a fixed point
     * every edge joins equal labels — so the fixed point is exactly
     * (entity_id, min id in component).
+    *
+    * Each round's frame is cut via the pluggable `cut` strategy
+    * (SURVEY.md §7.4.7): the sandbox default is localCheckpoint; a
+    * cluster run passes [[graft.plans.LineageCut.Reliable]] so an
+    * executor loss mid-loop recovers from durable storage. The
+    * iteration cap FAILS LOUDLY instead of returning silently partial
+    * labels.
     */
   def connectedComponentsFast(
       spark: SparkSession,
@@ -255,11 +197,7 @@ object Canonicalize {
       vertices: DataFrame,
       edges: DataFrame,
       maxIter: Int = 50,
-      cut: graft.plans.LineageCut = graft.plans.LineageCut.Default,
-      /** dev hook (CcProbe A/B): disable the string->long rank
-        * encoding; results are identical either way
-        */
-      encodeIds: Boolean = true)
+      cut: graft.plans.LineageCut = graft.plans.LineageCut.Default)
       : (DataFrame, Int) = {
     // ---- round-6 physical preparation, semantics unchanged ----
     // (1) STRING vertex ids are rank-encoded to dense longs for the
@@ -285,7 +223,7 @@ object Canonicalize {
     // shuffle setting, the same deployment knob every other exchange
     // uses.
     val parts = spark.sessionState.conf.numShufflePartitions
-    val encode = encodeIds && vertices.schema.head.dataType ==
+    val encode = vertices.schema.head.dataType ==
       org.apache.spark.sql.types.StringType
     val ranked = if (encode) {
       cut.cut(graft.plans.GlobalRank.withGlobalRowNumber(
@@ -314,17 +252,21 @@ object Canonicalize {
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      // (A) propagate: l'(v) = min(l(v), min over neighbors u of l(u));
-      // aggregate + left join + least, not union + re-aggregate (see
-      // connectedComponents for the union-constraint-rewrite rationale)
+      // (A) propagate via aggregate + left join + least rather than
+      // union + re-aggregate: the aggregation input is the join result
+      // alone, and a Union of a checkpointed-lineage labels frame with a
+      // frame derived FROM it trips Spark's union constraint rewrite
+      // (AttributeMap key-not-found on LogicalRDD origin constraints
+      // referencing pruned attributes — observed with a
+      // localCheckpoint()ed entity table as canonicalMapDf input).
+      // least skips NULLs: an isolated vertex keeps its own label.
       val neighborMin = sym
         .join(labels, sym("dst") === labels("entity_id"))
         .groupBy(sym("src").as("entity_id"))
         .agg(min(col("canonical_id")).as("__nbr_min"))
-      // the round's OLD label rides along so the convergence check can
-      // be OBSERVED during the cut's own materialization instead of
-      // scheduling a separate compare-join job per round (round 6; the
-      // projection above the observe drops it before the checkpoint)
+      // the round's OLD label rides along so the convergence count is
+      // OBSERVED during the cut's own materialization instead of
+      // scheduling a separate compare job per round
       val propagated = labels
         .join(neighborMin, Seq("entity_id"), "left")
         .select(col("entity_id"), col("canonical_id").as("__old"),
@@ -334,33 +276,18 @@ object Canonicalize {
       // from `vertices`) fixed instead of dropping the row
       val lookup = propagated.select(
         col("entity_id").as("__lid"), col("canonical_id").as("__lcan"))
-      val obs = org.apache.spark.sql.Observation()
-      val next = cut.cut(propagated.alias("p")
-        .join(lookup, col("p.canonical_id") === col("__lid"), "left")
-        .select(col("p.entity_id"),
-          coalesce(col("__lcan"), col("p.canonical_id")).as("canonical_id"),
-          col("p.__old"))
-        .observe(obs, coalesce(sum(when(
-            col("canonical_id") =!= col("__old"), 1L)), lit(0L))
-          .cast("long").as("chg"))
-        .select(col("entity_id"), col("canonical_id")))
-      // async listener delivery; fall back to the compare join if the
-      // cut strategy's action did not surface the metric (correct
-      // under any strategy — only slower)
-      val changed = {
-        var i = 0
-        while (obs.future.value.isEmpty && i < 40) { Thread.sleep(25); i += 1 }
-        obs.future.value match {
-          case Some(scala.util.Success(row)) if !row.isNullAt(0) =>
-            row.getLong(0)
-          case _ => next.alias("n")
-            .join(labels.alias("o"), Seq("entity_id"))
-            .filter(col("n.canonical_id") =!= col("o.canonical_id"))
-            .limit(1).count()
-        }
-      }
-      labels = next
-      converged = changed == 0
+      val moved = col("canonical_id") =!= col("__old")
+      val (next, changed) = graft.plans.ObservedCount.attach(
+        propagated.alias("p")
+          .join(lookup, col("p.canonical_id") === col("__lid"), "left")
+          .select(col("p.entity_id"),
+            coalesce(col("__lcan"), col("p.canonical_id")).as("canonical_id"),
+            col("p.__old")),
+        cut,
+        agg = coalesce(sum(when(moved, 1L)), lit(0L)).as("chg"),
+        fallback = _.filter(moved).limit(1).count())
+      labels = next.select(col("entity_id"), col("canonical_id"))
+      converged = changed() == 0
       iter += 1
     }
     if (!converged)
@@ -429,7 +356,7 @@ object Canonicalize {
 
   /** Driver-local exact all-pairs jaccard + union-find over collected
     * (entity_id, surfaces) rows — the physical small-input fast path
-    * shared by both canonicalMap entry points.
+    * of [[canonicalMapDfTracked]].
     */
   private def localAllPairsMap(
       surf: Seq[(String, Seq[String])],
@@ -476,34 +403,39 @@ object Canonicalize {
         "distributed-edge-local-uf")
     } else {
       // pointer-jumping CC: the open path's component diameter is
-      // unbounded (chains of near-duplicate spellings), so the
-      // O(diameter) min-label loop is wrong here — it would either
-      // throw at maxIter or pay diameter-many shuffle rounds
+      // unbounded (chains of near-duplicate spellings), which the
+      // O(log diameter) rounds of the shortcut loop absorb
       (connectedComponentsFast(spark, ids, edges, cut = cut),
         "distributed-cc")
     }
   }
 
+  /** The closed vocabulary as a canonicalization input: one
+    * (entity_id, surfaces = canonical +: aliases) row per entity, an
+    * in-memory LocalRelation (so the local branch of
+    * [[canonicalMapDfTracked]] collects it without a Spark job).
+    */
+  private[graft] def surfaceTable(
+      spark: SparkSession, entities: Seq[Entity]): DataFrame = {
+    import spark.implicits._
+    entities.map(e => (e.entity_id, e.canonical +: e.aliases))
+      .toDF("entity_id", "surfaces")
+  }
+
   /** Full canonicalization: Seq[Entity] -> (entity_id, canonical_id).
-    * The closed-vocabulary entry point (gazetteer contract); below
+    * The closed-vocabulary entry point (gazetteer contract): a thin call
+    * to [[canonicalMapDf]] over the Seq's local frame, so both entry
+    * points share one implementation and one input contract. Below
     * `localMaxEntities` it runs entirely driver-side with ZERO Spark
-    * jobs. For corpus-derived OPEN entity tables use [[canonicalMapDf]]
-    * — same semantics, no driver-side Seq.
+    * jobs (the local frame's bounded collect is a LocalTableScan).
     */
   def canonicalMap(
       spark: SparkSession,
       entities: Seq[Entity],
       jaccardThreshold: Double = 0.5,
-      localMaxEntities: Int = LocalCanonMaxEntities): DataFrame = {
-    import spark.implicits._
-    val surf = entities.map(e => (e.entity_id, e.canonical +: e.aliases))
-    if (entities.size <= localMaxEntities)
-      localAllPairsMap(surf, jaccardThreshold).toSeq
-        .toDF("entity_id", "canonical_id")
-    else
-      distributedCanonicalMap(spark, surf.toDF("entity_id", "surfaces"),
-        jaccardThreshold, graft.plans.LineageCut.Default)._1
-  }
+      localMaxEntities: Int = LocalCanonMaxEntities): DataFrame =
+    canonicalMapDf(spark, surfaceTable(spark, entities), jaccardThreshold,
+      localMaxEntities)
 
   /** [[canonicalMapDf]]'s result plus the physical path it took —
     * "local" (driver all-pairs under the probe cutoff),
@@ -522,15 +454,15 @@ object Canonicalize {
     * extracted from the corpus itself (reference analog: the
     * corpus-derived synset/cluster sets of
     * word_sense_pipeline.py:241-252 are built from data, not a fixed
-    * vocabulary). CONTRACT: `entity_id` is unique (the open pipeline
-    * builds it from `distinct` surfaces). The LOCAL path FAILS FAST on
-    * duplicate ids (the probe rows are already in hand, so the check is
-    * free — VERDICT r5 #5: silently last-write-winning through a Map
-    * diverged from the distributed path, which emits duplicate rows and
-    * keeps the documented undefined-behavior contract: a distributed
-    * uniqueness pass would cost a corpus-scale shuffle per call to
-    * police a precondition the producing pipeline enforces by
-    * construction). The driver-local fast
+    * vocabulary). CONTRACT: `entity_id` is non-null and unique (the
+    * open pipeline builds it from `distinct` surfaces). The LOCAL path
+    * FAILS FAST on null or duplicate ids (the probe rows are already in
+    * hand, so the checks are free — silently last-write-winning
+    * through a Map diverged from the distributed path, which emits
+    * duplicate rows and keeps the documented undefined-behavior
+    * contract: a distributed uniqueness pass would cost a corpus-scale
+    * shuffle per call to police a precondition the producing pipeline
+    * enforces by construction). The driver-local fast
     * path is keyed off ONE bounded
     * `limit(localMaxEntities + 1)` collect (short-circuiting job, the
     * DataFrame analogue of `Seq.size`; the collected rows ARE the local
@@ -576,19 +508,23 @@ object Canonicalize {
       val rows = probeRows
         .map(r => (r.getString(0), r.getSeq[String](1)))
         .toSeq
-      // fail fast on duplicate ids (VERDICT r5 #5): the rows are in
-      // hand, so this costs one driver pass; without it the shingle
-      // Map in localAllPairsMap silently last-write-wins while the
-      // distributed path emits duplicate rows — divergent results for
-      // the same (invalid) input
+      // fail fast on duplicate or null ids: the rows are in hand, so
+      // this costs one driver pass; without it the shingle Map in
+      // localAllPairsMap silently last-write-wins while the distributed
+      // path emits duplicate rows — divergent results for the same
+      // (invalid) input — and a null id throws an NPE in its pair loop
       val dups = rows.iterator.map(_._1)
         .foldLeft(Map.empty[String, Int]) { (m, k) =>
           m.updated(k, m.getOrElse(k, 0) + 1)
-        }.filter(_._2 > 1).keys.toSeq.sorted
+        }.filter(_._2 > 1).keys.toSeq
+        .map(k => String.valueOf(k: AnyRef)).sorted
       require(dups.isEmpty,
         s"canonicalMapDf: duplicate entity_id values in the input " +
           s"(contract: unique ids); first ${math.min(dups.size, 5)} of " +
           s"${dups.size}: ${dups.take(5).mkString(", ")}")
+      require(!rows.exists(_._1 == null),
+        "canonicalMapDf: null entity_id in the input (contract: " +
+          "non-null ids)")
       CanonResult(localAllPairsMap(rows, jaccardThreshold).toSeq
         .toDF("entity_id", "canonical_id"), "local")
     } else {

@@ -188,10 +188,10 @@ object Dedup {
     * Reliable/Replicated.
     *
     * Physical dispatch: inline-broadcast verification while docs and
-    * prefix postings fit the broadcast knobs (cheap parallel `count()`s
-    * on the two checkpointed frames — never a single-partition limit
-    * probe), staged join+agg+verify above them; identical results on
-    * both sides of the cutoff.
+    * prefix postings fit the broadcast knobs (both counts observed
+    * during the two frames' own cuts — no probe job, and the docs are
+    * collected only for the inline plan), staged join+agg+verify above
+    * them; identical results on both sides of the cutoff.
     */
   def jaccardPairsOnSets(
       df: DataFrame, id: String, setCol: String,
@@ -199,28 +199,17 @@ object Dedup {
       cut: graft.plans.LineageCut = graft.plans.LineageCut.Default,
       inlineMaxPostings: Long = JaccardInlineMaxPostings,
       inlineMaxDocs: Long = JaccardInlineMaxDocs): DataFrame = {
-    val (docs, prefixes, prefixCount) =
+    val (docs, docCount, prefixes, prefixCount) =
       jaccardPrefixes(df, id, setCol, threshold, cut)
-    // Round 6: the doc-side probe and the inline path's driver collect
-    // are ONE bounded job — limit(maxDocs + 1).collect() both proves
-    // the table is driver-small AND hands over the rows the in-plan
-    // set table is built from (the former separate docs.count() was a
-    // whole extra scheduling round-trip per query). The frame is
-    // eagerly materialized by `cut`, so the bounded collect cannot
-    // observe a second source evaluation; above the cutoff the
-    // (bounded, discarded) rows cost one driver round-trip — the same
-    // probe-once pattern canonicalMapDf uses. The prefix-side probe
-    // rides the cut itself (ObservedCount) — no separate job either.
-    val docRows =
-      if (graft.functions.IntersectSets.supportedKey(
-            docs.schema.head.dataType))
-        docs.limit(
-          (math.min(inlineMaxDocs, Int.MaxValue.toLong - 1) + 1).toInt)
-          .collect()
-      else null
-    if (docRows != null && docRows.length <= inlineMaxDocs &&
-        prefixCount() <= inlineMaxPostings)
-      jaccardPairsInline(docRows, prefixes, id, threshold)
+    // Both size probes ride the frames' own cuts (ObservedCount) — no
+    // probe job. The docs are collected (the in-plan set table is
+    // built from those rows) only once the dispatch has chosen the
+    // inline plan; the frame is eagerly materialized by `cut`, so the
+    // collect cannot observe a second source evaluation.
+    if (graft.functions.IntersectSets.supportedKey(
+          docs.schema.head.dataType) &&
+        docCount() <= inlineMaxDocs && prefixCount() <= inlineMaxPostings)
+      jaccardPairsInline(docs.collect(), prefixes, id, threshold)
     else
       jaccardVerify(docs, candidatePairs(prefixes, id, threshold),
         id, threshold)
@@ -244,7 +233,7 @@ object Dedup {
     // and its definition (distinct pairs surviving the length +
     // positional filters) must not move when the query's physical plan
     // does. The verified count is plan-independent (exact).
-    val (docs, prefixes, _) = jaccardPrefixes(
+    val (docs, _, prefixes, _) = jaccardPrefixes(
       graft.plans.Spread.ensure(df, col(id))
         .select(col(id), shingles(col(text), shingleN).as("__sh")),
       id, "__sh", threshold, cut)
@@ -253,14 +242,16 @@ object Dedup {
   }
 
   /** shared stages 1-3 (see [[jaccardPairs]]): returns the materialized
-    * sorted-set doc table (id, sh, n implied by size), the materialized
-    * prefix-posting table (id, n, pos, g), and the posting count
-    * (delivered by the cut's own materialization — ObservedCount).
+    * sorted-set doc table (id, sh, n implied by size) with its row
+    * count, and the materialized prefix-posting table (id, n, pos, g)
+    * with its row count (both counts delivered by the cuts' own
+    * materialization — ObservedCount).
     */
   private def jaccardPrefixes(
       df: DataFrame, id: String, setCol: String,
       threshold: Double,
-      cut: graft.plans.LineageCut): (DataFrame, DataFrame, () => Long) = {
+      cut: graft.plans.LineageCut)
+      : (DataFrame, () => Long, DataFrame, () => Long) = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     // shingle arrays stored SORTED: one sort per document buys the
@@ -268,9 +259,9 @@ object Dedup {
     // pair the document participates in. array_distinct enforces the
     // set contract (idempotent for already-distinct callers, and the
     // sizes n feeding every filter must be SET sizes).
-    val docs = cut.cut(df
+    val (docs, docCount) = graft.plans.ObservedCount.attach(df
       .select(col(id), sort_array(array_distinct(col(setCol))).as("sh"))
-      .filter(size(col("sh")) > 0))
+      .filter(size(col("sh")) > 0), cut)
     val posting = docs.select(col(id), explode(col("sh")).as("g"))
     val dfreq = posting.groupBy(col("g")).agg(count(lit(1)).as("df"))
     // rare-first order per doc; struct sort = (df asc, g asc), one
@@ -313,7 +304,7 @@ object Dedup {
       .select(col(id), col("n"), (col("pos0") + 1).as("pos"), col("g"))
       .repartition(df.sparkSession.sessionState.conf.numShufflePartitions),
       cut)
-    (docs, prefixes, prefixCount)
+    (docs, docCount, prefixes, prefixCount)
   }
 
   /** stages 4-5 of the STAGED plan (see [[jaccardPairs]]): prefix

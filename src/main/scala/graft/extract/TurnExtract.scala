@@ -4,6 +4,7 @@ import graft.link.EntityLink
 import graft.schema.{Entity, Triple}
 import graft.score.Embed
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.lit
 
 /** Per-turn extraction: overlap resolution + entity linking + predicate
   * pairing in ONE `mapPartitions` pass with pooled scorer state — the
@@ -32,10 +33,15 @@ object TurnExtract {
       surface: String,
       is_mention: Boolean)
 
+  /** One OPEN (shape-detected, non-gazetteer) unigram of a turn. */
+  final case class OpenSpan(token_pos: Int, surface: String)
+
+  /** `open` is NULL for span groups built without an open shape pattern */
   final case class TurnSpans(
       conv_id: String,
       turn_idx: Int,
-      spans: Seq[Span])
+      spans: Seq[Span],
+      open: Seq[OpenSpan])
 
   /** In-task per-partition extraction metrics (north rule: "mentions/sec,
     * triples/partition" written alongside each commit). Collected via a
@@ -89,10 +95,10 @@ object TurnExtract {
       scorer: EntityLink.Scorer,
       preds: Map[String, String],
       rec: Recorder,
-      // already-linked OPEN provisional mentions (token_pos, token_len,
-      // entity_id, score) — merged with the scored gazetteer mentions
-      // by token position (positions are disjoint: the open shape
-      // requires digits, gazetteer surfaces are all-letter, mirroring
+      // already-linked OPEN provisional mentions (see openLinked) —
+      // merged with the scored gazetteer mentions by token position
+      // (positions are disjoint: the open shape requires digits,
+      // gazetteer surfaces are all-letter, mirroring
       // ReferenceOracle.openTriples' independent scans)
       openLinked: Seq[(Int, Int, String, Double)] = Nil)
       : Iterator[Triple] = {
@@ -129,6 +135,17 @@ object TurnExtract {
     }
   }
 
+  /** an OPEN unigram as a pre-linked provisional mention
+    * (token_pos, token_len, entity_id = `open:<surface>`, score 1.0)
+    */
+  private def openLinked(pos: Int, surface: String) =
+    (pos, 1, "open:" + surface, 1.0)
+
+  /** Span groups (MentionDetect.spanCandidates) -> triples. Groups that
+    * carry an `open` column (spanCandidates with an open shape pattern)
+    * also link their open unigrams, exactly as the fused per-row pass
+    * of [[timedTriplesFromTurns]] does.
+    */
   def triples(
       spark: SparkSession,
       turnSpans: DataFrame,
@@ -143,15 +160,22 @@ object TurnExtract {
       prebuiltIndex.getOrElse(EntityLink.buildIndex(entities)))
     val bcPreds = spark.sparkContext.broadcast(predicates)
 
-    turnSpans.as[TurnSpans].mapPartitions { it =>
+    val groups =
+      if (turnSpans.columns.contains("open")) turnSpans
+      else turnSpans.withColumn("open",
+        lit(null).cast("array<struct<token_pos:int,surface:string>>"))
+    groups.as[TurnSpans].mapPartitions { it =>
       // pooled per-partition state: index + surface memo (reference:
       // reused inference session across batches)
       val scorer = new EntityLink.Scorer(bcIndex.value, minScore)
       val preds = bcPreds.value
       val rec = new Recorder(metrics)
-      it.flatMap(t =>
-        extract(t.conv_id, t.turn_idx, t.spans, scorer, preds, rec)) ++
-        rec.sentinel
+      it.flatMap { t =>
+        val open =
+          if (t.open == null) Nil
+          else t.open.map(o => openLinked(o.token_pos, o.surface))
+        extract(t.conv_id, t.turn_idx, t.spans, scorer, preds, rec, open)
+      } ++ rec.sentinel
     }
   }
 
@@ -224,14 +248,14 @@ object TurnExtract {
             if (gazBi.contains(bg))
               spans += Span(i, 2, bg, is_mention = true)
           }
-          // find(), not matches(): the composed branch's openMentions
+          // find(), not matches(): the staged branch's spanCandidates
           // uses rlike (substring FIND) — with the default anchored
           // OpenShapePattern the two agree, but a caller-supplied
           // unanchored pattern must yield the same triples on both
-          // sides of gazetteerFastPathMax (r5 ADVICE)
+          // sides of gazetteerFastPathMax
           if (openRe != null && openRe.matcher(toks(i)).find() &&
               !gazToks.contains(toks(i)))
-            open += ((i, 1, "open:" + toks(i), 1.0))
+            open += openLinked(i, toks(i))
           i += 1
         }
         extract(t.conv_id, t.turn_idx, spans.result(), scorer, preds, rec,

@@ -28,36 +28,58 @@ object MentionDetect {
     * both a gazetteer surface and a predicate trigger yields one row of
     * each kind, matching the oracle's independent gap scan.
     *
+    * `openShapePattern` (the open pipeline's staged path): when set,
+    * the unigrams [[openMentions]] would detect — tokens matching the
+    * pattern that are no token of any gazetteer surface — are also
+    * collected per turn, in the same pass, as an `open` column;
+    * TurnExtract.triples links them as provisional `open:<surface>`
+    * entities exactly as the fused per-row pass does.
+    *
     * Output: (conv_id, turn_idx,
     *          spans: array<struct<token_pos, token_len, surface,
-    *          is_mention>>) — consumed by graft.extract.TurnExtract.
+    *          is_mention>>
+    *          [, open: array<struct<token_pos, surface>>]) — consumed by
+    *          graft.extract.TurnExtract.
     */
   def spanCandidates(
       spark: SparkSession,
       turns: DataFrame,
       gazetteer: Seq[String],
-      predicates: Map[String, String]): DataFrame = {
+      predicates: Map[String, String],
+      openShapePattern: Option[String] = None): DataFrame = {
     import spark.implicits._
     val gaz = gazetteer.toDF("surface").withColumn("__gaz", lit(1))
     val predMap = typedlit(predicates)
-    val flagged = candidateSpans(spark, turns)
+    val matched = candidateSpans(spark, turns)
       .join(broadcast(gaz), Seq("surface"), "left")
+    val (withToks, openFlag) = openShapePattern match {
+      case None => (matched, lit(false))
+      case Some(p) =>
+        val toks = gazetteerTokens(spark, gazetteer)
+          .withColumn("__tok", lit(1))
+        (matched.join(broadcast(toks), Seq("surface"), "left"),
+          $"token_len" === 1 && $"surface".rlike(p) && $"__tok".isNull)
+    }
+    val flagged = withToks
       .select($"conv_id", $"turn_idx", $"token_pos", $"token_len",
         $"surface",
         $"__gaz".isNotNull.as("gm"),
         ($"token_len" === 1 && map_contains_key(predMap, $"surface"))
-          .as("pm"))
-      .filter($"gm" || $"pm")
-    val expanded = flagged.select(
-      $"conv_id", $"turn_idx", $"token_pos", $"token_len", $"surface",
-      explode(
-        when($"gm" && $"pm", array(lit(true), lit(false)))
-          .when($"gm", array(lit(true)))
-          .otherwise(array(lit(false)))).as("is_mention"))
-    expanded
+          .as("pm"),
+        openFlag.as("om"))
+      .filter($"gm" || $"pm" || $"om")
+    // one conditional collect per span kind (collect_list skips the
+    // NULLs of non-matching rows): a token that is both a gazetteer
+    // surface and a trigger lands in both lists
+    def kind(flag: String, isMention: Boolean) =
+      collect_list(when(col(flag), struct($"token_pos", $"token_len",
+        $"surface", lit(isMention).as("is_mention"))))
+    val open = openShapePattern.map(_ =>
+      collect_list(when($"om", struct($"token_pos", $"surface"))).as("open"))
+    flagged
       .groupBy($"conv_id", $"turn_idx")
-      .agg(collect_list(struct($"token_pos", $"token_len", $"surface",
-        $"is_mention")).as("spans"))
+      .agg(concat(kind("gm", isMention = true), kind("pm", isMention = false))
+        .as("spans"), open.toSeq: _*)
   }
 
   /** Candidate spans = unigrams ++ bigrams in ONE array, exploded by the
@@ -119,7 +141,7 @@ object MentionDetect {
       gazetteer: Seq[String],
       shapePattern: String = OpenShapePattern): Dataset[Mention] = {
     import spark.implicits._
-    val gazToks = gazetteer.flatMap(_.split(" ")).distinct.toDF("surface")
+    val gazToks = gazetteerTokens(spark, gazetteer)
     turns
       .select($"conv_id", $"turn_idx",
         posexplode(TextOps.tokens($"text")).as(Seq("token_pos", "surface")))
@@ -128,6 +150,13 @@ object MentionDetect {
       .select($"conv_id", $"turn_idx", $"token_pos",
         lit(1).as("token_len"), $"surface")
       .as[Mention]
+  }
+
+  /** every token of any gazetteer surface, one `surface` row each */
+  private def gazetteerTokens(
+      spark: SparkSession, gazetteer: Seq[String]): DataFrame = {
+    import spark.implicits._
+    gazetteer.flatMap(_.split(" ")).distinct.toDF("surface")
   }
 
   /** turns(conv_id, turn_idx, text, ...) -> Dataset[Mention]. */

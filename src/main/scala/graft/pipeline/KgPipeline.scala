@@ -7,25 +7,29 @@ import graft.gen.Vocab
 import graft.graph.Materialize
 import graft.link.EntityLink
 import graft.mention.MentionDetect
+import graft.plans.LineageCut
 import graft.schema._
-import graft.triple.TripleExtract
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{array, avg, col, concat, count, lit, min}
 
 /** End-to-end KG construction (SURVEY.md §7.2, north rule):
   *
   *   turns --mention detect--> spans --pooled-scorer link + pattern
-  *   pairing--> triples --LSH canon + connected components--> relabeled
-  *   triples --> node/edge tables (TableIO snapshots via materialize)
+  *   pairing--> triples --exact jaccard canon + connected components-->
+  *   relabeled triples --> node/edge tables (TableIO snapshots via
+  *   materialize)
   *
+  * ONE pipeline body ([[pipeline]]) serves both entry points: [[run]]
+  * (closed gazetteer vocabulary) and [[runOpen]] (the same plus
+  * shape-detected provisional entities) are thin adapters over it.
   * All stages are Dataset/DataFrame + Catalyst (no RDD API); the only
   * imperative region is the pooled scorer inside `mapPartitions`
   * (TurnExtract), mirroring the reference's reused inference session
   * (search_pipeline.py:192-194). Extraction picks between two physical
   * paths by gazetteer size (see GazetteerFastPathMax); both are tested
-  * equivalent. Stage checkpointing, per-partition extraction metrics,
-  * and lineage manifests come from graft.ckpt.Checkpoint plus the
-  * CollectionAccumulator wired here.
+  * equivalent for both pipelines. Stage checkpointing, per-partition
+  * extraction metrics, and lineage manifests come from
+  * graft.ckpt.Checkpoint plus the CollectionAccumulator wired here.
   */
 object KgPipeline {
 
@@ -58,6 +62,7 @@ object KgPipeline {
     */
   val GazetteerFastPathMax = 100000
 
+  /** Closed-vocabulary pipeline: every entity comes from `entities`. */
   def run(
       spark: SparkSession,
       turns: DataFrame,
@@ -69,18 +74,97 @@ object KgPipeline {
       gazetteerFastPathMax: Int = GazetteerFastPathMax,
       // gazetteer defaults to the surfaces of the provided entity index
       // (1-2 token phrases); pass explicitly to widen/narrow detection
-      gazetteer: Seq[String] = null,
-      // OPEN-entity-set canonicalization: a (entity_id, surfaces:
-      // array<string>) DataFrame (e.g. corpus-derived provisional
-      // entities) routed through the DataFrame-native
-      // Canonicalize.canonicalMapDf — no driver-side Seq on the canon
-      // path. Entities outside `entities` keep their own id as
-      // canonical unless merged. NOTE: not folded into the checkpoint
-      // fingerprint (it is data, not a parameter) — callers using
-      // checkpointRoot with a custom entity table follow the same
-      // one-root-per-corpus contract as the turns input.
-      entitySurfacesDf: Option[DataFrame] = None): Result = {
-    val gaz = Option(gazetteer).getOrElse(
+      gazetteer: Seq[String] = null): Result =
+    pipeline(spark, turns, entities, minLinkScore, predicates,
+      Option(gazetteer), openShapePattern = None, checkpointRoot,
+      shufflePartitions, gazetteerFastPathMax, jaccardThreshold = 0.5,
+      LineageCut.Default, Materialize.RelabelBroadcastMaxEntities).result
+
+  final case class OpenResult(
+      triples: Dataset[Triple],
+      canonicalMap: DataFrame,
+      /** distinct provisional (open) entity ids detected in the corpus */
+      openEntities: DataFrame,
+      /** which Canonicalize.canonicalMapDfTracked branch ran — "local",
+        * "distributed-edge-local-uf", or "distributed-cc"; bench/ops
+        * evidence that a run exercised the intended scale path
+        */
+      canonPath: String)
+
+  /** OPEN-entity-set pipeline (corpus-DERIVED entity tables): gazetteer
+    * mentions are detected and linked as in [[run]], and additionally
+    * every token matching `shapePattern` (service/resource-style names
+    * outside the gazetteer) becomes a PROVISIONAL entity
+    * `open:<surface>` with link score 1.0. The provisional entity table
+    * — whose size is corpus-dependent and therefore can never be a
+    * driver Seq — joins the closed entities in ONE (entity_id,
+    * surfaces) DataFrame canonicalized by the same
+    * Canonicalize.canonicalMapDfTracked call [[run]] makes, so
+    * near-identical spellings of the same open name (and open/closed
+    * coreferences) merge by the same exact-jaccard semantics. Both
+    * physical extraction paths detect and link the open names inside
+    * the pooled extraction pass; they are pinned equal in
+    * KgPipelineSpec and P/R-gated against ReferenceOracle.openTriples.
+    *
+    * Scale contracts: iterative/reused frames cut via the pluggable
+    * `cut` (a cluster run passes LineageCut.Reliable); relabel falls
+    * back from broadcast to shuffle joins past `relabelBroadcastMax`
+    * map entries (an unbounded open vocabulary must not be broadcast).
+    */
+  def runOpen(
+      spark: SparkSession,
+      turns: DataFrame,
+      entities: Seq[Entity] = Vocab.entities,
+      minLinkScore: Double = Vocab.minLinkScore,
+      predicates: Map[String, String] = Vocab.predicates,
+      shufflePartitions: Int = 32,
+      jaccardThreshold: Double = 0.5,
+      shapePattern: String = MentionDetect.OpenShapePattern,
+      gazetteerFastPathMax: Int = GazetteerFastPathMax,
+      cut: LineageCut = LineageCut.Default,
+      relabelBroadcastMax: Long = Materialize.RelabelBroadcastMaxEntities)
+      : OpenResult = {
+    val b = pipeline(spark, turns, entities, minLinkScore, predicates,
+      gazetteer = None, Some(shapePattern), checkpointRoot = None,
+      shufflePartitions, gazetteerFastPathMax, jaccardThreshold, cut,
+      relabelBroadcastMax)
+    OpenResult(b.result.triples, b.canonicalMap, b.openEntities.get,
+      b.canonPath)
+  }
+
+  /** [[pipeline]]'s output: the closed-pipeline result plus the open
+    * pipeline's extra views (`openEntities` is set iff an open shape
+    * pattern was given)
+    */
+  private final case class Built(
+      result: Result,
+      canonicalMap: DataFrame,
+      openEntities: Option[DataFrame],
+      canonPath: String)
+
+  /** The one pipeline body behind [[run]] and [[runOpen]]: gazetteer
+    * derivation, entry repartition, ONE fused/staged extraction
+    * dispatch on `gazetteerFastPathMax`, ONE entity table (the closed
+    * entities, plus the distinct open surfaces when
+    * `openShapePattern` is set), ONE canonicalization call and ONE
+    * relabel, then the node/edge tables. Every stage optionally
+    * commits through Checkpoint.
+    */
+  private def pipeline(
+      spark: SparkSession,
+      turns: DataFrame,
+      entities: Seq[Entity],
+      minLinkScore: Double,
+      predicates: Map[String, String],
+      gazetteer: Option[Seq[String]],
+      openShapePattern: Option[String],
+      checkpointRoot: Option[String],
+      shufflePartitions: Int,
+      gazetteerFastPathMax: Int,
+      jaccardThreshold: Double,
+      cut: LineageCut,
+      relabelBroadcastMax: Long): Built = {
+    val gaz = gazetteer.getOrElse(
       entities.flatMap(e => e.canonical +: e.aliases)
         .map(_.toLowerCase).distinct.sorted
         .filter(_.split(" ").length <= 2))
@@ -115,7 +199,7 @@ object KgPipeline {
     // root per input corpus — documented contract); its schema is folded
     // in as a cheap drift signal. All components are JVM-stable hashes
     // (String/Seq/Map hashCode are specified murmur/31-based).
-    val fingerprint = {
+    lazy val fingerprint = {
       // cheap DATA signal: the sorted input-file list of the turns scan
       // (empty for in-memory frames). Catches the silent-stale-reuse
       // case of re-pointing the same checkpoint root at a different
@@ -159,7 +243,6 @@ object KgPipeline {
     val index: IndexedSeq[(String, Array[Float])] = checkpointRoot match {
       case Some(_) =>
         val idxDf = stage("entity_index", Seq("entities")) {
-          import spark.implicits._
           EntityLink.buildIndex(entities)
             .map { case (id, v) => (id, v.toSeq) }
             .toDF("entity_id", "vec")
@@ -171,13 +254,13 @@ object KgPipeline {
     }
 
     val rawTriples = (if (gaz.size <= gazetteerFastPathMax) {
-      // fast path: whole extraction in one shuffle-free pooled
-      // mapPartitions pass (north-star shape; gazetteer as broadcast Set)
+      // fast path: whole extraction (open shape detection and linking
+      // included) in one shuffle-free pooled mapPartitions pass
+      // (north-star shape; gazetteer as broadcast Set)
       stage("triples", Seq("turns", "gazetteer", "entity_index")) {
-        import spark.implicits._
         TurnExtract.timedTriplesFromTurns(spark, turnsP.as[Turn],
             gaz, entities, minLinkScore, predicates, Some(extractionAcc),
-            prebuiltIndex = Some(index))
+            prebuiltIndex = Some(index), openShapePattern = openShapePattern)
           .drop("ts")
       }
     } else {
@@ -185,10 +268,11 @@ object KgPipeline {
       // gazetteer JOIN -> per-turn span groups, no exchange past the
       // entry repartition), then pooled-scorer resolution/link/pairing.
       // The unfused operators (MentionDetect.mentions, EntityLink.link,
-      // TripleExtract.triples) also remain as standalone library
-      // operators; all paths asserted equivalent in KgPipelineSpec.
+      // TripleExtract.triples) remain as standalone library operators;
+      // all paths asserted equivalent in KgPipelineSpec.
       val spans = stage("turn_spans", Seq("turns", "gazetteer")) {
-        MentionDetect.spanCandidates(spark, turnsP, gaz, predicates)
+        MentionDetect.spanCandidates(spark, turnsP, gaz, predicates,
+          openShapePattern)
       }
       stage("triples", Seq("turn_spans", "entity_index")) {
         TurnExtract.triples(spark, spans, entities, minLinkScore,
@@ -197,26 +281,50 @@ object KgPipeline {
       }
     }).as[Triple]
 
-    val canonMap = stage("canonical_map", Seq("entity_index")) {
-      entitySurfacesDf match {
-        case Some(df) => Canonicalize.canonicalMapDf(spark, df)
-        case None => Canonicalize.canonicalMap(spark, entities)
-      }
+    // the entity table: the closed entities, plus one provisional
+    // entity per distinct open surface. The surface scan reads raw
+    // `turns`, not turnsP: it is a separate action, so a turnsP lineage
+    // would RE-EXECUTE the full-corpus entry repartition (shuffle deps
+    // are not reused across jobs); the output is partitioning-invariant
+    // and the distinct's own exchange moves only the matching tokens.
+    val openSurf = openShapePattern.map { p =>
+      MentionDetect.openMentions(spark, turns, gaz, p).toDF()
+        .select($"surface").distinct()
+        .select(concat(lit("open:"), $"surface").as("entity_id"),
+          array($"surface").as("surfaces"))
     }
+    val entityTable = openSurf.foldLeft(
+      Canonicalize.surfaceTable(spark, entities))(_.unionByName(_))
+    // a canonical_map stage loaded on resume reports no branch
+    var canonPath = "checkpointed"
+    val canonMap = stage("canonical_map", Seq("entity_index")) {
+      val r = Canonicalize.canonicalMapDfTracked(spark, entityTable,
+        jaccardThreshold, cut = cut)
+      canonPath = r.path
+      r.map
+    }
+    // relabel's broadcast decision needs the map size, which is free on
+    // every branch: the closed map has exactly one row per entity; the
+    // local map of an open table is an in-memory LocalRelation (size
+    // known from the plan); a distributed open map OBSERVES its size
+    // during its own cut — relabel never schedules a separate probe job
+    val (relabelMap, mapSize) =
+      if (openSurf.isEmpty) (canonMap, Some(entities.size.toLong))
+      else canonMap.queryExecution.optimizedPlan match {
+        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          (canonMap, Some(lr.data.length.toLong))
+        case _ =>
+          val (m, n) = graft.plans.ObservedCount.attach(canonMap, cut)
+          (m, Some(n()))
+      }
 
     // U-6: observed metrics ride the plan itself (zero extra jobs) —
     // any first action on the triples also delivers row count + score
     // stats, complementing the in-task accumulator metrics above
     val tripleObs = new org.apache.spark.sql.Observation()
     val relabeled = stage("triples_canonical", Seq("triples", "canonical_map")) {
-      // closed path: the canonical map has exactly one row per entity
-      // (every entry point maps every id), so the relabel broadcast
-      // probe is free; a caller-supplied entity TABLE has unknown
-      // cardinality and keeps the parallel count probe
-      Materialize.relabel(spark, rawTriples, canonMap,
-        knownMapSize =
-          if (entitySurfacesDf.isEmpty) Some(entities.size.toLong)
-          else None).toDF()
+      Materialize.relabel(spark, rawTriples, relabelMap, relabelBroadcastMax,
+        knownMapSize = mapSize).toDF()
     }.as[Triple]
       .observe(tripleObs, count(lit(1)).as("triples"),
         min(col("score")).as("min_score"), avg(col("score")).as("avg_score"))
@@ -245,145 +353,16 @@ object KgPipeline {
         os.close()
       }
     }
-    Result(relabeled, nodes, edges, stats.toSeq, metricsFn,
-      // non-blocking read of the observed row (Observation.get blocks
-      // until an action; future.value is None before one)
-      () => tripleObs.future.value match {
-        case Some(scala.util.Success(row)) =>
-          row.schema.fieldNames.zip(row.toSeq).toMap
-        case _ => Map.empty
-      })
-  }
-
-  final case class OpenResult(
-      triples: Dataset[Triple],
-      canonicalMap: DataFrame,
-      /** distinct provisional (open) entity ids detected in the corpus */
-      openEntities: DataFrame,
-      /** which Canonicalize.canonicalMapDfTracked branch ran — "local",
-        * "distributed-edge-local-uf", or "distributed-cc"; bench/ops
-        * evidence that a run exercised the intended scale path
-        */
-      canonPath: String)
-
-  /** OPEN-entity-set pipeline variant (the untrodden scale path of
-    * VERDICT r3: corpus-DERIVED entity tables): gazetteer mentions are
-    * detected and linked as in [[run]], and additionally every token
-    * matching `shapePattern` (service/resource-style names outside the
-    * gazetteer) becomes a PROVISIONAL entity `open:<surface>` with link
-    * score 1.0. The provisional entity table — whose size is
-    * corpus-dependent and therefore can never be a driver Seq — joins
-    * the closed entities in ONE (entity_id, surfaces) DataFrame routed
-    * through the DataFrame-native Canonicalize.canonicalMapDfTracked, so
-    * near-identical spellings of the same open name (and open/closed
-    * coreferences) merge by the same exact-jaccard semantics.
-    *
-    * Physical dispatch mirrors [[run]]: while the gazetteer fits a
-    * per-executor Set (`gazetteerFastPathMax`), the whole extraction —
-    * gazetteer spans, shape detection, open linking, pairing — runs in
-    * ONE pooled shuffle-free mapPartitions pass
-    * (TurnExtract.timedTriplesFromTurns with openShapePattern), closing
-    * r4's ~6x per-triple gap vs the closed fast path. Above the knob
-    * it composes the standalone library operators
-    * (MentionDetect.mentions/openMentions, EntityLink.link,
-    * TripleExtract.triples); both paths are pinned equal in
-    * KgPipelineSpec and P/R-gated against ReferenceOracle.openTriples.
-    *
-    * Scale contracts (closed r4): iterative/reused frames cut via the
-    * pluggable `cut` (a cluster run passes LineageCut.Reliable);
-    * relabel falls back from broadcast to shuffle joins past
-    * `relabelBroadcastMax` map entries (an unbounded open vocabulary
-    * must not be broadcast).
-    */
-  def runOpen(
-      spark: SparkSession,
-      turns: DataFrame,
-      entities: Seq[Entity] = Vocab.entities,
-      minLinkScore: Double = Vocab.minLinkScore,
-      predicates: Map[String, String] = Vocab.predicates,
-      shufflePartitions: Int = 32,
-      jaccardThreshold: Double = 0.5,
-      shapePattern: String = MentionDetect.OpenShapePattern,
-      gazetteerFastPathMax: Int = GazetteerFastPathMax,
-      cut: graft.plans.LineageCut = graft.plans.LineageCut.Default,
-      relabelBroadcastMax: Long = Materialize.RelabelBroadcastMaxEntities)
-      : OpenResult = {
-    import spark.implicits._
-    val gaz = entities.flatMap(e => e.canonical +: e.aliases)
-      .map(_.toLowerCase).distinct.sorted
-      .filter(_.split(" ").length <= 2)
-    val turnsP = turns.repartition(shufflePartitions,
-      turns("conv_id"), turns("turn_idx"))
-
-    val (rawTriples, openSurfSrc) =
-      if (gaz.size <= gazetteerFastPathMax) {
-        // fused fast path: detection + open linking + pairing in one
-        // pooled pass; the entity table still needs the distinct open
-        // surfaces — a Catalyst-only scan (tokenize -> explode -> rlike
-        // -> anti-join -> distinct), no scorer, no span grouping
-        val t = TurnExtract.timedTriplesFromTurns(spark, turnsP.as[Turn],
-            gaz, entities, minLinkScore, predicates,
-            openShapePattern = Some(shapePattern))
-          .drop("ts").as[Triple]
-        // raw `turns`, not turnsP: the surface scan is a separate
-        // action, so a turnsP lineage would RE-EXECUTE the full-corpus
-        // entry repartition (shuffle deps are not reused across jobs);
-        // the output is partitioning-invariant and the distinct's own
-        // exchange moves only the matching tokens
-        val surf = MentionDetect.openMentions(spark, turns, gaz,
-          shapePattern).toDF().select($"surface").distinct()
-        (t, surf)
-      } else {
-        // staged scale path: composed standalone operators (a 1e8-surface
-        // gazetteer forces the join-based mention detection)
-        val closed = EntityLink.link(spark,
-          MentionDetect.mentions(spark, turnsP, gaz), entities, minLinkScore)
-        // raw `turns` for the same reason as the fused branch: mention
-        // rows carry their own (conv_id, turn_idx); TripleExtract
-        // repartitions the union itself
-        val open = cut.cut(MentionDetect
-          .openMentions(spark, turns, gaz, shapePattern)
-          .toDF()) // reused: linked union + entity table
-        val linkedOpen = open.select($"conv_id", $"turn_idx", $"token_pos",
-            $"token_len", $"surface",
-            concat(lit("open:"), $"surface").as("entity_id"),
-            lit(1.0).as("score"))
-          .as[LinkedMention]
-        (TripleExtract.triples(spark, turnsP,
-          closed.unionByName(linkedOpen), predicates, shufflePartitions),
-          open.select($"surface").distinct())
-      }
-
-    val closedSurf = entities
-      .map(e => (e.entity_id, e.canonical +: e.aliases))
-      .toDF("entity_id", "surfaces")
-    val openSurf = openSurfSrc
-      .select(concat(lit("open:"), $"surface").as("entity_id"),
-        array($"surface").as("surfaces"))
-    val canonRes = Canonicalize.canonicalMapDfTracked(spark,
-      closedSurf.unionByName(openSurf), jaccardThreshold, cut = cut)
-    // the map is consumed twice by relabel; on the local path it is
-    // already an in-memory LocalRelation (size known from the plan),
-    // and on the distributed paths the size is OBSERVED during the
-    // map's own cut — relabel never schedules a separate probe job
-    val (canonMap, mapSize) =
-      if (canonRes.path == "local")
-        (canonRes.map,
-          Some(canonRes.map.queryExecution.optimizedPlan match {
-            case lr: org.apache.spark.sql.catalyst.plans.logical
-                .LocalRelation => lr.data.length.toLong
-            case _ => -1L
-          }).filter(_ >= 0))
-      else {
-        val (m, n) = graft.plans.ObservedCount.attach(canonRes.map, cut)
-        (m, Some(n()))
-      }
-    OpenResult(
-      Materialize.relabel(spark, rawTriples, canonMap, relabelBroadcastMax,
-        knownMapSize = mapSize),
-      canonMap,
-      openSurf.select($"entity_id"),
-      canonRes.path)
+    Built(
+      Result(relabeled, nodes, edges, stats.toSeq, metricsFn,
+        // non-blocking read of the observed row (Observation.get blocks
+        // until an action; future.value is None before one)
+        () => tripleObs.future.value match {
+          case Some(scala.util.Success(row)) =>
+            row.schema.fieldNames.zip(row.toSeq).toMap
+          case _ => Map.empty
+        }),
+      relabelMap, openSurf.map(_.select($"entity_id")), canonPath)
   }
 
   /** Materialize the graph into snapshot-committed node/edge tables.

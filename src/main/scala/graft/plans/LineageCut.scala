@@ -33,7 +33,7 @@ import org.apache.spark.storage.StorageLevel
   * returns) so loop-convergence checks and `count()` probes downstream
   * observe identical execution behavior regardless of strategy;
   * results are byte-identical by construction (LineageCutSpec pins
-  * connectedComponents and jaccardPairs equal across strategies).
+  * connectedComponentsFast and jaccardPairs equal across strategies).
   */
 sealed trait LineageCut {
   def cut(df: DataFrame): DataFrame

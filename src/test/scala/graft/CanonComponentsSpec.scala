@@ -4,14 +4,14 @@ import graft.canon.Canonicalize
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Connected-components convergence contracts (VERDICT r4 tasks #2/#3):
+/** Connected-components convergence contracts:
   *
-  *   - the O(diameter) min-label loop must FAIL LOUDLY when a component's
-  *     diameter exceeds maxIter — a silently partial label set is a
-  *     WRONG canonical map (open corpus-derived vocabularies can chain
-  *     near-duplicate spellings to arbitrary diameter);
-  *   - the pointer-jumping variant must produce the identical map and
-  *     converge in O(log n) rounds on exactly those graphs.
+  *   - the loop must FAIL LOUDLY when it does not converge within
+  *     maxIter — a silently partial label set is a WRONG canonical map
+  *     (open corpus-derived vocabularies can chain near-duplicate
+  *     spellings to arbitrary diameter);
+  *   - pointer jumping must converge in O(log n) rounds on exactly those
+  *     graphs and produce the same map as local union-find and GraphX.
   */
 class CanonComponentsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -26,16 +26,17 @@ class CanonComponentsSpec extends AnyFunSuite {
     (ids.toDF("entity_id"), edges.toDF("src", "dst"))
   }
 
-  test("min-label CC throws on a chain longer than maxIter instead of " +
-    "returning silently partial labels") {
-    val (ids, es) = chain(12)
+  test("pointer-jumping CC throws on a chain longer than maxIter") {
+    // a length-64 chain needs more than 2 pointer-jumping rounds; the
+    // loop must refuse instead of returning silently partial labels
+    val (ids, es) = chain(64)
     val (v, e) = toDf(ids, es)
     val ex = intercept[IllegalStateException] {
-      Canonicalize.connectedComponents(spark, v, e, maxIter = 5)
+      Canonicalize.connectedComponentsFast(spark, v, e, maxIter = 2)
     }
     assert(ex.getMessage.contains("did not converge"))
     // the same graph under a sufficient cap still converges exactly
-    val ok = Canonicalize.connectedComponents(spark, v, e, maxIter = 15)
+    val ok = Canonicalize.connectedComponentsFast(spark, v, e, maxIter = 15)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(ok == ids.map(_ -> ids.head).toMap)
   }
@@ -52,8 +53,8 @@ class CanonComponentsSpec extends AnyFunSuite {
     assert(rounds <= bound, s"took $rounds rounds, bound $bound")
   }
 
-  test("pointer-jumping CC == min-label CC == local union-find on " +
-    "seeded random graphs (including isolated vertices)") {
+  test("pointer-jumping CC == GraphX == local union-find on random graphs") {
+    import org.apache.spark.graphx.{Edge, Graph}
     val rnd = new scala.util.Random(7)
     for (trial <- 0 until 3) {
       val n = 40 + trial * 10
@@ -66,10 +67,15 @@ class CanonComponentsSpec extends AnyFunSuite {
       val fast = Canonicalize.connectedComponentsFast(spark, v, e)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(fast == expected, s"trial $trial: fast != local union-find")
-      val minLabel = Canonicalize.connectedComponents(spark, v, e,
-          maxIter = n)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(minLabel == expected, s"trial $trial: min-label != local")
+      // GraphX labels a component by its min vertex INDEX, and ids are
+      // index-ordered, so its labels map back to the same min ids
+      val gx = Graph(
+          spark.sparkContext.parallelize(ids.indices.map(i => (i.toLong, i))),
+          spark.sparkContext.parallelize(edges.map { case (a, b) =>
+            Edge(ids.indexOf(a).toLong, ids.indexOf(b).toLong, 1) }))
+        .connectedComponents().vertices.collect()
+        .map { case (vi, c) => ids(vi.toInt) -> ids(c.toInt) }.toMap
+      assert(fast == gx, s"trial $trial: fast != GraphX")
     }
   }
 
@@ -88,7 +94,7 @@ class CanonComponentsSpec extends AnyFunSuite {
     // depends on the concrete lineage). The loop now builds no Union
     // node at all — aggregate + left join + least — so the failure
     // mode is structurally impossible; this pins the
-    // checkpointed-input contract on both CC variants.
+    // checkpointed-input contract.
     val surf = Seq(
       ("e1", Seq("streamer")), ("e2", Seq("streamers")),
       ("e3", Seq("unrelatedword")))
@@ -103,8 +109,8 @@ class CanonComponentsSpec extends AnyFunSuite {
     val expected = Map("e1" -> "e1", "e2" -> "e1", "e3" -> "e3")
     assert(labelsOf(
       Canonicalize.connectedComponentsFast(spark, ids, edges)) == expected)
-    assert(labelsOf(
-      Canonicalize.connectedComponents(spark, ids, edges)) == expected)
+    assert(labelsOf(Canonicalize.canonicalMapDf(spark, surf, 0.5,
+      localMaxEntities = 0)) == expected)
   }
 
   test("pointer-jumping CC under Reliable lineage cut equals the default") {
@@ -140,6 +146,27 @@ class CanonComponentsSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("duplicate entity_id"))
     assert(ex.getMessage.contains("e1"))
+    // the Seq entry point runs the same path, so it fails the same way
+    import graft.schema.Entity
+    def contractError(es: Seq[Entity]) = intercept[IllegalArgumentException] {
+      Canonicalize.canonicalMap(spark, es, 0.5)
+    }.getMessage
+    val seqDup = contractError(Seq(Entity("e1", "streamer", Nil),
+      Entity("e2", "unrelatedword", Nil), Entity("e1", "streamers", Nil)))
+    assert(seqDup.contains("duplicate entity_id") && seqDup.contains("e1"))
+    // a duplicated NULL id reports the contract, not an NPE from sorting
+    val nullDup = contractError(Seq(Entity(null, "streamer", Nil),
+      Entity(null, "streamers", Nil)))
+    assert(nullDup.contains("duplicate entity_id") && nullDup.contains("null"))
+    // a single NULL id reports the contract, not an NPE from the pair loop
+    assert(contractError(Seq(Entity(null, "streamer", Nil),
+      Entity("e2", "streamers", Nil))).contains("null entity_id"))
+    val dfNull = intercept[IllegalArgumentException] {
+      Canonicalize.canonicalMapDf(spark,
+        Seq[(String, Seq[String])]((null, Seq("streamer")),
+          ("e2", Seq("streamers"))).toDF("entity_id", "surfaces"), 0.5)
+    }
+    assert(dfNull.getMessage.contains("null entity_id"))
     // unique ids keep working on the same shape
     val ok = Canonicalize.canonicalMapDf(spark,
         Seq(("e1", Seq("streamer")), ("e2", Seq("streamers")))

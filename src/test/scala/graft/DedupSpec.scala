@@ -85,6 +85,31 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("jaccard dispatch above inlineMaxDocs never collects the docs") {
+    val sets = corpus()
+      .select(col("doc_id"), Dedup.shingles(col("text")).as("s"))
+    def rows(d: DataFrame): Set[(Long, Long, Long, Double)] =
+      d.collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    // the driver collect of the doc table is the one job whose call
+    // site is a `collect` inside Dedup.scala
+    def docCollects(jobs: Seq[String]) =
+      jobs.filter(_.contains("collect at Dedup.scala"))
+    val (inline, inlineJobs) = JobProbe.jobsOf(spark) {
+      rows(Dedup.jaccardPairsOnSets(sets, "doc_id", "s", 0.5))
+    }
+    // the detector sees the collect where the inline plan needs it
+    assert(docCollects(inlineJobs).nonEmpty, s"jobs: $inlineJobs")
+    // 100 non-empty docs > inlineMaxDocs = 10: the staged plan runs,
+    // the size probe is observed on the docs cut, nothing is collected
+    val (staged, stagedJobs) = JobProbe.jobsOf(spark) {
+      rows(Dedup.jaccardPairsOnSets(sets, "doc_id", "s", 0.5,
+        inlineMaxDocs = 10))
+    }
+    assert(docCollects(stagedJobs).isEmpty, s"jobs: $stagedJobs")
+    assert(staged == inline && inline.nonEmpty)
+  }
+
   test("jaccardPairStats: verified count == jaccardPairs row count, " +
     "candidates >= verified, and candidates shrink as t rises") {
     val df = corpus()

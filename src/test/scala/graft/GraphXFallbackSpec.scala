@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** SURVEY.md §4.3.3 names GraphX connectedComponents as the fallback for
   * the DataFrame-iterative union-find; this pins that all three
-  * implementations (GraphX, iterative joins, local union-find) induce
-  * the same partition of the vertex set.
+  * implementations (GraphX, the pointer-jumping DataFrame loop, local
+  * union-find) induce the same partition of the vertex set.
   */
 class GraphXFallbackSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -24,7 +24,7 @@ class GraphXFallbackSpec extends AnyFunSuite {
       m.groupBy(_._2).values.map(_.keySet).toSet
 
     val local = Canonicalize.localUnionFind(ids, edges)
-    val dist = Canonicalize.connectedComponents(spark,
+    val dist = Canonicalize.connectedComponentsFast(spark,
         ids.toDF("entity_id"), edges.toDF("src", "dst"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
 

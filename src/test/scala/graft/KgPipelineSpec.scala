@@ -66,9 +66,14 @@ class KgPipelineSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val expected = ReferenceOracle.canonicalMap(Vocab.entities)
     assert(got == expected)
-    val local = graft.canon.Canonicalize.canonicalMap(spark, Vocab.entities)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    // the closed pipeline's canonicalization (the local branch) runs
+    // driver-side: building AND reading the map schedules no Spark job
+    val (local, jobs) = JobProbe.jobsOf(spark) {
+      graft.canon.Canonicalize.canonicalMap(spark, Vocab.entities)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    }
     assert(local == expected)
+    assert(jobs.isEmpty, s"local canonicalization ran Spark jobs: $jobs")
     // the fixture must contain at least one real merge
     assert(expected.exists { case (k, v) => k != v },
       "no coreferent entities merged — canon fixture too weak")
@@ -157,18 +162,17 @@ class KgPipelineSpec extends AnyFunSuite {
         jaccardThreshold = 0.3, localMaxEntities = Int.MaxValue)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(local == expected)
-    // wired into the pipeline: entitySurfacesDf routes canonical_map
-    // through the DataFrame path; triples must equal the default run
-    // (Vocab.entities' surface table produces the same canonical map)
+    // end-to-end: KgPipeline canonicalizes through this same DataFrame
+    // path, so its graph nodes are exactly the canonical ids
+    // canonicalMapDf assigns to the vocabulary's surface table
     val vocabSurf = Vocab.entities
       .map(e => (e.entity_id, e.canonical +: e.aliases))
       .toDF("entity_id", "surfaces")
-    def key(t: Triple) = (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)
-    val viaDf = KgPipeline.run(spark, turns.toDF(), shufflePartitions = 4,
-      entitySurfacesDf = Some(vocabSurf)).triples.collect().map(key).toSet
-    val default = KgPipeline.run(spark, turns.toDF(), shufflePartitions = 4)
-      .triples.collect().map(key).toSet
-    assert(viaDf == default)
+    val vocabCanon = graft.canon.Canonicalize.canonicalMapDf(spark, vocabSurf)
+      .collect().map(_.getString(1)).toSet
+    val nodeIds = KgPipeline.run(spark, turns.toDF(), shufflePartitions = 4)
+      .nodes.collect().map(_.entity_id).toSet
+    assert(nodeIds == vocabCanon)
   }
 
   test("open-entity pipeline: provisional entities (shape-detected, " +
@@ -212,6 +216,8 @@ class KgPipelineSpec extends AnyFunSuite {
   test("fused open fast path == composed operator chain in runOpen(), " +
     "and the relabel shuffle fallback (knob = 0) is identical and " +
     "hint-free") {
+    // the composed side is the staged path (gazetteerFastPathMax = 0):
+    // spanCandidates with the open shape pattern -> TurnExtract.triples
     import spark.implicits._
     val openTurns = TranscriptGen.openTranscripts(spark, nConvs = 150,
       turnsPerConv = 8, nBases = 6, partitions = 4)

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The pluggable lineage-cut strategy (plans.LineageCut): the iterative
   * operators must produce IDENTICAL results under the durable
   * strategies a cluster run would use — localCheckpoint (default) has
-  * no recompute path after executor loss, so connectedComponents /
+  * no recompute path after executor loss, so connectedComponentsFast /
   * jaccardPairs / k-means expose a `cut` knob instead of hard-coding
   * it.
   */
@@ -51,7 +51,7 @@ class LineageCutSpec extends AnyFunSuite {
     "strategies produce the identical component map") {
     def run(cut: LineageCut) =
       graft.canon.Canonicalize
-        .connectedComponents(spark, vertices, edges, cut = cut)
+        .connectedComponentsFast(spark, vertices, edges, cut = cut)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val local = run(LineageCut.Local)
     assert(local == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "d",
@@ -87,10 +87,17 @@ class LineageCutSpec extends AnyFunSuite {
     val turns = graft.gen.TranscriptGen.openTranscripts(spark,
       nConvs = 60, turnsPerConv = 8, nBases = 4, partitions = 2).toDF()
     def key(t: Triple) = (t.conv_id, t.turn_idx, t.subj, t.pred, t.obj)
-    // composed path (gazetteerFastPathMax = 0) so the reused
-    // open-mentions frame actually goes through the cut strategy
+    // 2000 filler entities (random surfaces no transcript contains)
+    // push the entity table past LocalCanonMaxEntities, so the
+    // distributed canonicalization branch — the frames the cut strategy
+    // materializes — actually runs; staged extraction path
+    // (gazetteerFastPathMax = 0)
+    val rnd = new scala.util.Random(3)
+    val fillers = (0 until 2000).map(i => graft.schema.Entity(f"ent_fill_$i%04d",
+      (1 to 8).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString, Nil))
     def run(cut: LineageCut) =
       graft.pipeline.KgPipeline.runOpen(spark, turns,
+          entities = graft.gen.Vocab.entities ++ fillers,
           shufflePartitions = 2, gazetteerFastPathMax = 0, cut = cut)
         .triples.collect().map(key).toSet
     val local = run(LineageCut.Local)

@@ -100,7 +100,10 @@ class PlanGuardSpec extends AnyFunSuite {
             gazetteerFastPathMax = 0).triples.toDF()) ++
         audit("kg_open", graft.pipeline.KgPipeline
           .runOpen(spark, turns.unionByName(openTurns),
-            shufflePartitions = 2).triples.toDF())
+            shufflePartitions = 2).triples.toDF()) ++
+        audit("kg_open_staged", graft.pipeline.KgPipeline
+          .runOpen(spark, turns.unionByName(openTurns),
+            shufflePartitions = 2, gazetteerFastPathMax = 0).triples.toDF())
     assert(failures.isEmpty,
       s"pipeline plan regressions:\n  ${failures.mkString("\n  ")}")
   }

@@ -44,7 +44,7 @@ class PropertySpec extends AnyFunSuite {
       ("v04", "v05"), // chain -> component v00
       ("v06", "v07"), ("v07", "v08"), ("v08", "v06") // triangle -> v06
     )
-    val got = Canonicalize.connectedComponents(spark,
+    val got = Canonicalize.connectedComponentsFast(spark,
         ids.toDF("entity_id"), edges.toDF("src", "dst"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val expected = Canonicalize.localUnionFind(ids, edges)
